@@ -8,10 +8,13 @@ small JSON line per query {"query", "sec", "cold"}; then the summary
 is repeated as the LAST line (so both head- and tail-bounded captures
 contain a parseable total). Because the driver's capture is bounded,
 the FULL battery is additionally written repo-side (round 11, VERDICT
-r10 item 3) to ``BENCH_LOCAL_r{N}.json`` — the complete per-query
-{sec, cold, class} map plus the calibration stamp — so per-query
-round-over-round regression diffs are mechanical, not limited to the
-~31 alphabetical-tail lines that survive the driver capture.
+r10 item 3) to ``BENCH_LOCAL_r{N}_c{cores}.json`` — the complete
+per-query {sec, cold, class} map plus the calibration stamp — so
+per-query round-over-round regression diffs are mechanical, not
+limited to the ~31 alphabetical-tail lines that survive the driver
+capture. A rerun at the same round and core count writes
+``..._c{cores}_2.json`` and so on: a recorded battery is never
+overwritten.
 
 Methodology (documented in BASELINE.md §protocol): each query runs
 FOUR times — an untimed warm-up (Catalyst planning, whole-stage
@@ -65,6 +68,7 @@ number.
 from __future__ import annotations
 
 import glob
+import itertools
 import json
 import os
 import re
@@ -144,6 +148,21 @@ def _round_number() -> int:
         if (m := re.search(r"BENCH_r(\d+)\.json$", p))
     ]
     return max(rounds, default=0) + 1
+
+
+def _write_new(stem: str, record: dict) -> str:
+    """Write record as JSON to the first of stem.json, stem_2.json, …
+    in the repo root that does not exist yet (opened with "x", so a
+    tracked artifact is never overwritten); return its path."""
+    here = os.path.dirname(os.path.abspath(__file__))
+    for n in itertools.count(1):
+        path = os.path.join(here, stem + (f"_{n}" if n > 1 else "") + ".json")
+        try:
+            with open(path, "x") as f:
+                json.dump(record, f, indent=1, sort_keys=True)
+            return path
+        except FileExistsError:
+            continue
 
 
 def main() -> None:
@@ -266,10 +285,10 @@ def main() -> None:
             for n in sorted(per)
         },
     }
-    here = os.path.dirname(os.path.abspath(__file__))
-    path = os.path.join(here, f"BENCH_LOCAL_r{_round_number():02d}.json")
-    with open(path, "w") as f:
-        json.dump(local, f, indent=1, sort_keys=True)
+    path = _write_new(
+        f"BENCH_LOCAL_r{_round_number():02d}_c{spark.sparkContext.defaultParallelism}",
+        local,
+    )
     print(f"# full battery written to {path}", file=sys.stderr)
     spark.stop()
 

@@ -252,14 +252,21 @@ def _sorted_percentiles(
     spillable); only the ≤ 2·|ps| order-statistic rows per group
     survive to the final k-row rollup.
 
-    BIT-IDENTICAL to `percentile(col, array(ps))` by construction: for
-    n non-null values, Spark's Percentile.getPercentile computes
+    Follows `percentile(col, array(ps))` step for step: for n
+    non-null values, Spark's Percentile.getPercentile computes
     pos = p·(n−1), lower = floor(pos), higher = ceil(pos) and returns
-    (higher − pos)·v_lower + (pos − lower)·v_higher (v_lower when the
-    indexes coincide) over the sorted values — the exact expression
-    below, with the same double arithmetic (pinned on adversarial
-    random data incl. duplicate values and 1-row groups by
-    tests/test_operators.py::test_sorted_percentiles_matches_percentile).
+    v_lower when the indexes coincide OR the two order statistics are
+    equal, else (higher − pos)·v_lower + (pos − lower)·v_higher over
+    the sorted values. The expression below makes the same two
+    short-circuits and the same double arithmetic; equality with
+    Spark's aggregate is pinned, not proven, on random data incl.
+    duplicate values at fractional positions and 1-row groups by
+    tests/test_operators.py::test_sorted_percentiles_matches_percentile.
+
+    NULL values are dropped before ranking, so `n` is the NON-NULL
+    count and a group whose values are all NULL has no output row
+    (`percentile` and a COUNT(*)-based oracle would keep it, with a
+    NULL percentile and COUNT(*) rows).
 
     Returns one row per group: gcols + n (non-null count) + q0..qk in
     ps order. At 100 TB the grouped form is exactly how an exact
@@ -306,7 +313,7 @@ def _sorted_percentiles(
             )
         )
         outs.append(
-            F.when(hi == lo, vlo)
+            F.when((hi == lo) | (vlo == vhi), vlo)
             .otherwise(
                 (hi.cast("double") - pos) * vlo + (pos - lo.cast("double")) * vhi
             )
@@ -346,10 +353,10 @@ def q_b_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spelling history: five scalar percentile() calls measured 4.9 s
     (each buffers and sorts its own copy of the group), the
     single-buffer array form 1.7 s, and the round-12 sort-based order-
-    statistic form (_sorted_percentiles — bit-identical by the pinned
-    interpolation formula) ~0.7 s: the `percentile` aggregate's
-    per-group value map is serialized between partial and final agg
-    and sorted single-threaded, which the window sort avoids."""
+    statistic form (_sorted_percentiles — the same interpolation and
+    short-circuits, equality pinned by test) ~0.7 s: the `percentile`
+    aggregate's per-group value map is serialized between partial and
+    final agg and sorted single-threaded, which the window sort avoids."""
     li = load_table(spark, sf_dir, "lineitem")
     qs = {"p25": 0.25, "p50": 0.50, "p75": 0.75, "p95": 0.95, "p99": 0.99}
     wide = _sorted_percentiles(
@@ -1373,11 +1380,12 @@ def q_b_kll_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Audit: rank counts ride one combinable pass with the 1-row
     # merged-quantile table broadcast onto the scan; the exact
     # percentiles run as the sort-based order-statistic pipeline
-    # (_sorted_percentiles — bit-identical to the former
-    # percentile(...) aggregate, whose per-group value buffer cost
-    # ~2 s of this op's ~2.6 s execution; round 12). Three bounded
-    # passes total (KLL partials, rank counts, percentile sort) —
-    # the third pass costs ~0.2 s where the removed buffer cost ~2 s.
+    # (_sorted_percentiles — equal to the former percentile(...)
+    # aggregate on the pinned test data; that aggregate's per-group
+    # value buffer cost ~2 s of this op's ~2.6 s execution; round 12).
+    # Three bounded passes total (KLL partials, rank counts, percentile
+    # sort) — the third pass costs ~0.2 s where the removed buffer cost
+    # ~2 s.
     ranks = (
         li.crossJoin(F.broadcast(merged))
         .agg(

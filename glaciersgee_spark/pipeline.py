@@ -25,7 +25,7 @@ import json
 from dataclasses import dataclass, field
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 
 from glaciersgee_spark.sources import sinks
 from glaciersgee_spark.tables import load_table
@@ -125,27 +125,42 @@ def run_pipeline(
 ) -> dict:
     """Execute the full lifecycle; write the pending-work manifest as
     day-partitioned parquet; return summary counts (the only rows that
-    ever reach the driver)."""
+    ever reach the driver).
+
+    The plan runs once: `selected` (manifest rows) and `pending` (rows
+    left after the done-log anti join) are observed metrics of the
+    write itself. The sink is then verified by one read-back aggregate
+    (row count + distinct cells), skipped when nothing was written —
+    a zero-row partitioned write leaves no parquet footer to read."""
     done = (
         spark.read.parquet(done_log_path).select("event_id")
         if done_log_path
         else None
     )
+    selected, pending = Observation(), Observation()
     manifest = build_manifest(select_scenes(spark, sf_dir, cfg))
-    todo = pending_downloads(manifest, done)
-    sinks.write_parquet_partitioned(todo, output_dir, "day")
-    # Verify through the sink: a zero-row partitioned write leaves no
-    # parquet footer, so only read back when something was written.
-    pending = todo.count()
-    written = spark.read.parquet(output_dir) if pending else None
-    if written is not None and written.count() != pending:
-        raise AssertionError("sink row count != planned pending count")
+    todo = pending_downloads(_observe_count(manifest, selected), done)
+    sinks.write_parquet_partitioned(_observe_count(todo, pending), output_dir, "day")
+    n_pending = pending.get["n"]
+    cells = 0
+    if n_pending:
+        n_written, cells = spark.read.parquet(output_dir).agg(
+            F.count(F.lit(1)), F.countDistinct("user_id")
+        ).first()
+        if n_written != n_pending:
+            raise AssertionError("sink row count != planned pending count")
     return {
-        "selected": manifest.count(),
-        "pending": pending,
-        "cells": written.select("user_id").distinct().count() if pending else 0,
+        "selected": selected.get["n"],
+        "pending": n_pending,
+        "cells": cells,
         "output_dir": output_dir,
     }
+
+
+def _observe_count(df: DataFrame, obs: Observation) -> DataFrame:
+    """`df` with its row count observed as `obs.get["n"]` during
+    whatever action runs it (no extra job)."""
+    return df.observe(obs, F.count(F.lit(1)).alias("n"))
 
 
 # ---------------------------------------------------------------------------
@@ -223,14 +238,18 @@ def run_corpus_pipeline(
     spark: SparkSession, sf_dir: str, cfg: CorpusCleanConfig, output_dir: str
 ) -> dict:
     """Clean + split + write split-partitioned shards; return summary
-    counts (the only driver-side rows)."""
-    cleaned = clean_corpus(spark, sf_dir, cfg)
+    counts (the only driver-side rows). The per-split counts are
+    observed metrics of the write; the only other action is the input
+    row count."""
+    split_n = Observation()
+    cleaned = clean_corpus(spark, sf_dir, cfg).observe(
+        split_n,
+        *[F.count_if(F.col("split") == s).alias(s) for s in ("train", "val", "test")],
+    )
     sinks.write_parquet_partitioned(cleaned, output_dir, "split")
     input_n = load_table(spark, sf_dir, "documents").count()
-    by_split = {
-        r.split: r.n
-        for r in cleaned.groupBy("split").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
+    # Splits that received no document are absent, as from a groupBy.
+    by_split = {s: n for s, n in split_n.get.items() if n}
     return {
         "input_docs": input_n,
         "kept_docs": sum(by_split.values()),

@@ -7,6 +7,16 @@ Two entry paths exist:
 Because of the second path, every conf we depend on must ALSO be
 settable at runtime on a foreign session — :func:`ensure_confs` is
 called from the table loader so any query works on any session.
+
+One static conf is a speed setting only, so :func:`get_spark` alone
+sets it: the generated-code cache size (``_CODEGEN_CACHE_ENTRIES``).
+Spark keeps the Janino-compiled class of every whole-stage-codegen
+stage and projection in one JVM-wide LRU cache of 100 entries by
+default, fewer than one pass of either benchmark workload needs, so
+every pass recompiled almost all of its classes (~170 per sql_etl
+pass) and the JIT then compiled the new classes again. The cache holds
+compiled operator code, not data: a cached plan still recomputes every
+row.
 """
 
 from __future__ import annotations
@@ -36,6 +46,15 @@ _RUNTIME_CONFS = {
     # q_b_scan_pysource_filters' connector-side pruning.
     "spark.sql.python.filterPushdown.enabled": "true",
 }
+
+
+# Working set measured as the Janino compiles of a first pass with an
+# unbounded cache: ~165 (sql_etl), ~205 (llm_battery), ~7200 over one
+# run of every registered query at sf0.001. 1000 holds either workload's
+# pass several times over; the whole battery, whose queries run one at
+# a time, need not fit. A cached class costs ~14 KB of metaspace (135 →
+# 235 MB over those ~7200), so a full cache holds ~15 MB.
+_CODEGEN_CACHE_ENTRIES = "1000"
 
 
 def ensure_confs(spark: SparkSession) -> SparkSession:
@@ -71,6 +90,11 @@ def get_spark(app_name: str = "glaciersgee-spark") -> SparkSession:
         # fits; at 100 TB real dims still fit (region/nation/part-scale).
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         .config("spark.ui.enabled", "false")
+        # Static, so not in _RUNTIME_CONFS: ensure_confs cannot apply it
+        # to a foreign session (spark.conf.set refuses static confs, and
+        # the JVM sizes its codegen cache once, at the first compile).
+        # Such a session keeps Spark's default: slower, never different.
+        .config("spark.sql.codegen.cache.maxEntries", _CODEGEN_CACHE_ENTRIES)
     )
     for k, v in _RUNTIME_CONFS.items():
         builder = builder.config(k, v)

@@ -4793,13 +4793,14 @@ def test_shingle_base_bypass_serves_identical_rows(spark):
 
 
 def test_sorted_percentiles_matches_percentile(spark):
-    """The round-12 sort-based exact-percentile spelling must be
-    BIT-identical to Spark's `percentile(col, array(ps))` aggregate it
-    replaced in q_b_quantiles / q_b_kll_quantiles — same interpolation
-    (pos = p·(n−1); (hi−pos)·v_lo + (pos−lo)·v_hi), probed on
-    adversarial groups: 1-row, 2-row, duplicate-heavy, negative and
-    mixed-magnitude doubles, NULL values, and exact-index fractions
-    (0.0 / 0.5 / 1.0 / thirds) alongside interpolating ones."""
+    """The round-12 sort-based exact-percentile spelling must equal
+    Spark's `percentile(col, array(ps))` aggregate it replaced in
+    q_b_quantiles / q_b_kll_quantiles — same interpolation
+    (pos = p·(n−1); (hi−pos)·v_lo + (pos−lo)·v_hi) and short-circuits,
+    probed on adversarial groups: 1-row, 2-row, duplicate-heavy,
+    all-equal at a fractional position, negative and mixed-magnitude
+    doubles, NULL values, and exact-index fractions (0.0 / 0.5 / 1.0 /
+    thirds) alongside interpolating ones."""
     import random
 
     import pyspark.sql.functions as FF
@@ -4820,8 +4821,16 @@ def test_sorted_percentiles_matches_percentile(spark):
         ]
         rows += [(g, v) for v in vals]
         rows.append((g, None))  # percentile ignores NULLs
+    # Equal order statistics at a fractional position: interpolating
+    # them would not return the value itself ((hi−pos)·v + (pos−lo)·v
+    # != v in doubles), so this group passes only if the helper makes
+    # getPercentile's equal-values short-circuit.
+    ps = [0.0, 0.01, 0.1, 0.25, 1.0 / 3.0, 0.5, 2.0 / 3.0, 0.95, 0.9999, 1.0]
+    dup_g, dup_v = len({g for g, _ in rows}), [0.1, 0.1, 0.1]
+    pos = 0.1 * (len(dup_v) - 1)
+    assert (1 - pos) * 0.1 + (pos - 0) * 0.1 != 0.1  # the adversarial case
+    rows += [(dup_g, v) for v in dup_v]
     df = spark.createDataFrame(rows, "g int, v double")
-    ps = [0.0, 0.01, 0.25, 1.0 / 3.0, 0.5, 2.0 / 3.0, 0.95, 0.9999, 1.0]
     lits = ", ".join(repr(p) for p in ps)
     ref = {
         r["g"]: list(r["qv"])
@@ -4854,8 +4863,9 @@ def test_langid_f1_role_explode_edge_cases(spark):
     never exercises: a language NEVER predicted (fp row absent → the
     old join read NULL fp, coalesced to 0), a language ONLY predicted
     (absent from the old bytrue side → excluded), and a language with
-    ZERO correct predictions (tp 0, not NULL)."""
-    import pyspark.sql.functions as FF
+    ZERO correct predictions (tp 0, not NULL). Calls the query's own
+    helper, so the pinned semantics are the production reshape's."""
+    from glaciersgee_spark.operators.text import langid_role_counts
 
     rows = [
         ("en", "en"), ("en", "en"), ("en", "de"),   # normal
@@ -4864,41 +4874,9 @@ def test_langid_f1_role_explode_edge_cases(spark):
         ("xx", "zz"),                               # zz only predicted
     ]
     pred = spark.createDataFrame(rows, "lang string, pred_lang string")
-    conf = pred.groupBy("lang", "pred_lang").agg(
-        FF.count(FF.lit(1)).cast("long").alias("c")
-    )
-    roles = conf.select(
-        FF.explode(
-            FF.array(
-                FF.struct(
-                    FF.col("lang").alias("k"),
-                    FF.col("c").alias("n"),
-                    FF.when(FF.col("lang") == FF.col("pred_lang"), FF.col("c"))
-                    .otherwise(FF.lit(0))
-                    .alias("tp"),
-                    FF.lit(0).cast("long").alias("fp"),
-                ),
-                FF.struct(
-                    FF.col("pred_lang").alias("k"),
-                    FF.lit(0).cast("long").alias("n"),
-                    FF.lit(0).cast("long").alias("tp"),
-                    FF.when(FF.col("lang") != FF.col("pred_lang"), FF.col("c"))
-                    .otherwise(FF.lit(0))
-                    .alias("fp"),
-                ),
-            )
-        ).alias("r")
-    ).select("r.*")
     got = {
         r["lang"]: (r["n_docs"], r["tp"], r["fp"])
-        for r in roles.groupBy(FF.col("k").alias("lang"))
-        .agg(
-            FF.sum("n").cast("long").alias("n_docs"),
-            FF.sum("tp").cast("long").alias("tp"),
-            FF.sum("fp").cast("long").alias("fp"),
-        )
-        .where(FF.col("n_docs") > 0)
-        .collect()
+        for r in langid_role_counts(pred).collect()
     }
     # expected, computed first-principles from `rows`
     assert got == {
